@@ -289,6 +289,43 @@ def _assemble_product(
     )
 
 
+def _catalog_leaves(
+    spark: SparkSession, uuids_tsv: str
+) -> tuple[DataFrame, list, dict]:
+    """The catalog, its leaf rows (F2: processed datasets = null
+    descendants, bin/concatenate.py:339-342) in catalog order, and the
+    J2 ancestor map; an optional ``tissue`` column rides along for the
+    fleet build. ≤ thousands of rows: collected driver-side like J2."""
+    catalog = read_catalog(spark, uuids_tsv)
+    cols = ["uuid", "hubmap_id", "immediate_ancestor_ids",
+            "immediate_descendant_ids"]
+    if "tissue" in catalog.columns:
+        cols.append("tissue")
+    cat_rows = catalog.select(*cols).collect()
+    leaves = [r for r in cat_rows if r["immediate_descendant_ids"] is None]
+    ancestor_of = {r["uuid"]: r["immediate_ancestor_ids"] for r in cat_rows}
+    return catalog, leaves, ancestor_of
+
+
+def _product_uns(
+    leaves: list, tissue: str | None, product_uuid: str | None,
+    creation_time: str,
+) -> dict:
+    """The product's ``uns`` metadata over its leaf rows (catalog
+    order); a fresh uuid4 when no product uuid is injected."""
+    import uuid as uuidlib
+
+    return {
+        "creation_data_time": creation_time,
+        "uuid": product_uuid or str(uuidlib.uuid4()),
+        "datasets": [r["hubmap_id"] for r in leaves],
+        "dataset_uuids": [r["uuid"] for r in leaves],
+        "protocol": "https://github.com/hubmapconsortium/codex-data-products",
+        "epic_type": "analyses",
+        "tissue": tissue,
+    }
+
+
 def build_product(
     spark: SparkSession,
     data_dir: str,
@@ -321,17 +358,9 @@ def build_product(
     ``var`` (the cross-dataset channel axis) and ``varm_long`` (semi-
     joined against it) are block-relative; the maintainer re-derives
     both from its persisted per-dataset state."""
-    import uuid as uuidlib
     from datetime import datetime
 
-    catalog = read_catalog(spark, uuids_tsv)
-    cat_rows = catalog.select(
-        "uuid", "hubmap_id", "immediate_ancestor_ids", "immediate_descendant_ids"
-    ).collect()  # catalog ≤ thousands of rows: driver-side like J2
-
-    # F2: leaves = processed datasets (null descendants,
-    # bin/concatenate.py:339-342).
-    leaves = [r for r in cat_rows if r["immediate_descendant_ids"] is None]
+    catalog, leaves, ancestor_of = _catalog_leaves(spark, uuids_tsv)
     if only_datasets is not None:
         known = {r["uuid"] for r in leaves}
         missing = [u for u in only_datasets if u not in known]
@@ -339,12 +368,10 @@ def build_product(
             raise ValueError(f"not leaf datasets in the catalog: {missing}")
         wanted = set(only_datasets)
         leaves = [r for r in leaves if r["uuid"] in wanted]
-    processed_uuids = [r["uuid"] for r in leaves]
-    processed_hbmids = [r["hubmap_id"] for r in leaves]
-    ancestor_of = {r["uuid"]: r["immediate_ancestor_ids"] for r in cat_rows}
 
     parts = []
-    for ds in processed_uuids:
+    for r in leaves:
+        ds = r["uuid"]
         ds_tissue = tissue or (tissue_by_uuid or {}).get(ds)
         if ds_tissue is None and tissue_lookup is not None:
             ds_tissue = tissue_lookup(ds)
@@ -356,15 +383,9 @@ def build_product(
     if not parts:
         raise ValueError(f"no complete datasets found under {data_dir}")
 
-    uns = {
-        "creation_data_time": creation_time or str(datetime.now()),
-        "uuid": product_uuid or str(uuidlib.uuid4()),
-        "datasets": processed_hbmids,
-        "dataset_uuids": processed_uuids,
-        "protocol": "https://github.com/hubmapconsortium/codex-data-products",
-        "epic_type": "analyses",
-        "tissue": tissue,
-    }
+    uns = _product_uns(
+        leaves, tissue, product_uuid, creation_time or str(datetime.now())
+    )
     return _assemble_product(spark, catalog, parts, uns)
 
 
@@ -400,16 +421,10 @@ def build_products(
     tissues into one product). ``creation_time`` defaults to ONE
     shared timestamp so the fleet's products are mutually
     consistent."""
-    import uuid as uuidlib
     from datetime import datetime
 
-    catalog = read_catalog(spark, uuids_tsv)
+    catalog, leaves, ancestor_of = _catalog_leaves(spark, uuids_tsv)
     has_tissue_col = "tissue" in catalog.columns
-    cols = ["uuid", "hubmap_id", "immediate_ancestor_ids",
-            "immediate_descendant_ids"] + (["tissue"] if has_tissue_col else [])
-    cat_rows = catalog.select(*cols).collect()
-    leaves = [r for r in cat_rows if r["immediate_descendant_ids"] is None]
-    ancestor_of = {r["uuid"]: r["immediate_ancestor_ids"] for r in cat_rows}
 
     def tissue_of(row) -> str | None:
         if has_tissue_col and row["tissue"]:
@@ -444,16 +459,9 @@ def build_products(
             parts.append(p)
         if not parts:
             continue
-        uns = {
-            "creation_data_time": shared_time,
-            "uuid": (product_uuid_by_tissue or {}).get(t)
-            or str(uuidlib.uuid4()),
-            "datasets": [r["hubmap_id"] for r in rows],
-            "dataset_uuids": [r["uuid"] for r in rows],
-            "protocol": "https://github.com/hubmapconsortium/codex-data-products",
-            "epic_type": "analyses",
-            "tissue": t,
-        }
+        uns = _product_uns(
+            rows, t, (product_uuid_by_tissue or {}).get(t), shared_time
+        )
         products[t] = _assemble_product(spark, catalog, parts, uns)
     if not products:
         raise ValueError(f"no complete datasets found under {data_dir}")
@@ -488,10 +496,18 @@ PARTITIONED_TABLES = ("x_long", "obs", "edges")  # dataset-partitioned
 VERSIONED_TABLES = ("var", "varm_long")  # channel-grain, written at v=<k>
 COMMIT_MARKER = "_PRODUCT_COMMIT.json"
 COMMIT_DIR = "_commits"
+STATE_DIR = "_state"  # maintenance state, versioned v=<k> per relation
 
 
 def _commit_path(out_dir: str, version: int) -> str:
     return os.path.join(out_dir, COMMIT_DIR, f"v={version}.json")
+
+
+def _checkpoint(fail_after: str | None, step: str) -> None:
+    """Failure-injection seam of the atomicity tests: raise after
+    ``step`` when the writer was asked to crash there."""
+    if fail_after == step:
+        raise RuntimeError(f"injected crash after {step}")
 
 
 def write_commit_marker(
@@ -520,8 +536,7 @@ def write_commit_marker(
     (1) and (2)."""
     os.makedirs(os.path.join(out_dir, COMMIT_DIR), exist_ok=True)
     write_json_atomic(_commit_path(out_dir, commit["version"]), commit)
-    if _fail_after == "commit_file":
-        raise RuntimeError("injected crash after commit_file")
+    _checkpoint(_fail_after, "commit_file")
     tmp = os.path.join(out_dir, f".{COMMIT_MARKER}.tmp")
     with open(tmp, "w") as f:
         json.dump(commit, f)
@@ -535,16 +550,17 @@ def write_commit_marker(
 def read_commit_marker(out_dir: str, version: int | None = None) -> dict:
     """The committed snapshot descriptor — live by default, or any
     retained historical version (time travel). Raise if the product was
-    never committed (or a write crashed before its commit point), or if
-    ``version`` was never committed / already expired."""
+    never committed (or a write crashed before its commit point), if
+    ``version`` was never committed / already expired, or if the
+    descriptor carries no file-level manifest (a snapshot format this
+    code no longer reads)."""
     path = os.path.join(out_dir, COMMIT_MARKER)
     if not os.path.exists(path):
         raise FileNotFoundError(
             f"{out_dir} has no {COMMIT_MARKER}: product is uncommitted "
             "(a build crashed mid-write, or never ran) — re-run the build"
         )
-    with open(path) as f:
-        live = json.load(f)
+    live = _load_commit(path)
     if version is None or version == live["version"]:
         return live
     if version > live["version"]:
@@ -559,52 +575,61 @@ def read_commit_marker(out_dir: str, version: int | None = None) -> dict:
             f"version {version} has been expired (retention GC) — "
             "raise keep_last on expire_snapshots to retain more history"
         )
-    with open(vpath) as f:
-        return json.load(f)
+    return _load_commit(vpath)
+
+
+def _load_commit(path: str) -> dict:
+    """One commit descriptor, refused unless it names its files: every
+    read, maintenance batch and GC resolves the snapshot through
+    ``commit["files"]``."""
+    with open(path) as f:
+        commit = json.load(f)
+    if "files" not in commit:
+        raise ValueError(
+            f"{path} has no file-level manifest ('files'): the product was "
+            "committed in an older snapshot format — rebuild it "
+            "(build_product + write_product)"
+        )
+    return commit
 
 
 def read_product_table(
     spark: SparkSession, out_dir: str, table: str, version: int | None = None
 ) -> DataFrame:
     """Committed read: resolve the snapshot through the marker first.
-    Dataset-partitioned tables are filtered to the snapshot's COMMITTED
-    dataset list (partition pruning, not a row filter — a partition
-    written by an in-flight maintenance batch that hasn't reached its
-    commit point is invisible); the channel-grain axis tables read the
-    snapshot's pinned ``v=<k>`` directory, so a delta batch writing
-    ``v=k+1`` never disturbs a committed (or historical) read.
+    Dataset-partitioned tables load exactly the files the commit's
+    file-level manifest names for its committed datasets (file
+    selection at planning time, not a row filter — files written by an
+    in-flight maintenance batch that hasn't reached its commit point,
+    or orphaned by a crashed one, are never listed); the channel-grain
+    axis tables read the snapshot's pinned ``v=<k>`` directory, so a
+    batch writing ``v=k+1`` never disturbs a committed (or historical)
+    read.
 
-    Time travel (``version=k``) is EXACT for every table since round 9:
-    the commit records its file-level manifest, partitioned reads load
-    exactly those files (delta batches APPEND new files — they never
-    overwrite a committed file), so a dataset removed then re-added
-    reads its era-correct bytes at every version. Retention
-    (``expire_snapshots``) bounds how far back reads go.
+    Time travel (``version=k``) is EXACT for every table: maintenance
+    batches APPEND new files and never overwrite a committed one, so a
+    dataset removed then re-added reads its era-correct bytes at every
+    version. Retention (``expire_snapshots``) bounds how far back reads
+    go.
     """
     marker = read_commit_marker(out_dir, version)
-    if table in PARTITIONED_TABLES:
-        per_ds = marker.get("files", {}).get(table)
-        if per_ds is not None:
-            paths = [
-                os.path.join(out_dir, rel)
-                for ds in marker["dataset_uuids"]
-                for rel, _ in per_ds.get(ds, [])
-            ]
-            if paths:
-                return spark.read.option(
-                    "basePath", f"{out_dir}/{table}"
-                ).parquet(*paths)
-            # the snapshot references NO files for this table: schema
-            # from the directory footer, zero rows — never the dir scan
-            # (which could surface a crashed append attempt's orphans)
-            return spark.read.parquet(f"{out_dir}/{table}").filter(
-                F.lit(False)
-            )
-        # legacy pre-file-manifest marker
-        df = spark.read.parquet(f"{out_dir}/{table}")
-        return df.filter(F.col("dataset").isin(marker["dataset_uuids"]))
-    tv = marker["table_versions"][table]
-    return spark.read.parquet(f"{out_dir}/{table}/v={tv}")
+    if table in VERSIONED_TABLES:
+        tv = marker["table_versions"][table]
+        return spark.read.parquet(f"{out_dir}/{table}/v={tv}")
+    per_ds = marker["files"][table]
+    paths = [
+        os.path.join(out_dir, rel)
+        for ds in marker["dataset_uuids"]
+        for rel, _ in per_ds.get(ds, [])
+    ]
+    if paths:
+        return spark.read.option("basePath", f"{out_dir}/{table}").parquet(
+            *paths
+        )
+    # the snapshot references NO files for this table: schema from the
+    # directory footer, zero rows — never the dir scan (which could
+    # surface a crashed append attempt's orphans)
+    return spark.read.parquet(f"{out_dir}/{table}").filter(F.lit(False))
 
 
 def read_uns(out_dir: str, version: int | None = None) -> dict:
@@ -641,31 +666,6 @@ def _list_files(base: str, rel_to: str) -> list[list]:
     return sorted(out)
 
 
-def snapshot_files(out_dir: str, marker: dict) -> dict:
-    """The commit's file-level manifest — ``{table: {dataset: [[relpath,
-    size], ...]}}`` for the dataset-partitioned tables plus ``{table:
-    [[relpath, size], ...]}`` for the pinned axis versions. Read from
-    the marker (every commit since round 9 records it — the Iceberg
-    move: the snapshot IS its file list); synthesized by directory
-    listing for a legacy pre-round-9 marker."""
-    if "files" in marker:
-        return marker["files"]
-    files: dict = {}
-    for t in PARTITIONED_TABLES:
-        files[t] = {
-            ds: _list_files(
-                os.path.join(out_dir, t, f"dataset={ds}"), out_dir
-            )
-            for ds in marker["dataset_uuids"]
-        }
-    for t in VERSIONED_TABLES:
-        files[t] = _list_files(
-            os.path.join(out_dir, t, f"v={marker['table_versions'][t]}"),
-            out_dir,
-        )
-    return files
-
-
 def _files_size(files: dict) -> int:
     """Manifest 'Raw File Size' as a pure dict sum over the commit's
     file-level manifest — no os.walk at read time, and exactly the
@@ -680,13 +680,16 @@ def _files_size(files: dict) -> int:
 
 
 def expire_snapshots(out_dir: str, keep_last: int = 2) -> dict:
-    """Retention-based GC (the Iceberg/Delta 'expire snapshots' step,
-    replacing GC-at-commit): keep the newest ``keep_last`` committed
-    snapshots and delete everything no retained snapshot references —
-    dataset partitions, axis-table versions, maintenance-state versions
-    and commit files. Because the previous snapshot stays whole until
-    expiry, a reader that resolved the marker before a delta committed
-    can finish its scan without losing files mid-read.
+    """Retention-based GC (the Iceberg/Delta 'expire snapshots' step;
+    nothing is deleted at commit): keep the newest ``keep_last``
+    committed snapshots and delete everything no retained snapshot
+    references — partition data files (file grain: a file survives
+    while ANY retained commit's file manifest names it, so an untouched
+    dataset's files shared across snapshots stay), partition dirs left
+    empty, axis-table versions, maintenance-state versions and commit
+    files. Because the previous snapshot stays whole until expiry, a
+    reader that resolved the marker before a batch committed can finish
+    its scan without losing files mid-read.
 
     Single-writer: call from the maintenance writer (post-commit), never
     concurrently with an in-flight batch — an uncommitted batch's
@@ -707,51 +710,33 @@ def expire_snapshots(out_dir: str, keep_last: int = 2) -> dict:
     markers = [read_commit_marker(out_dir, v) for v in retained]
     removed: dict = {"partitions": [], "files": [], "axis_versions": [],
                      "commits": [], "state_versions": []}
-    # file-grain GC (round 9): delete exactly the data files no
-    # retained snapshot's manifest references — a file shared by two
-    # retained snapshots (the common case: an untouched dataset)
-    # survives because EVERY referencing commit names it. Legacy
-    # markers without a file manifest fall back to the partition-grain
-    # rule (delete dataset dirs absent from every retained snapshot).
-    all_filed = all("files" in m for m in markers)
-    if all_filed:
-        referenced: set[str] = set()
-        for m in markers:
-            for t in PARTITIONED_TABLES:
-                for entries in m["files"].get(t, {}).values():
-                    referenced.update(rel for rel, _ in entries)
+    referenced: set[str] = set()
+    for m in markers:
         for t in PARTITIONED_TABLES:
-            base = os.path.join(out_dir, t)
-            if not os.path.isdir(base):
-                continue
-            for dp, _, fns in os.walk(base):
-                for fn in fns:
-                    if fn.startswith(("_", ".")):
-                        continue
-                    rel = os.path.relpath(os.path.join(dp, fn), out_dir)
-                    if rel not in referenced:
-                        os.remove(os.path.join(dp, fn))
-                        removed["files"].append(rel)
-            # prune partition dirs emptied of data files
-            for d in sorted(os.listdir(base)):
-                pdir = os.path.join(base, d)
-                if d.startswith("dataset=") and os.path.isdir(pdir) and not any(
-                    not fn.startswith(("_", "."))
-                    for _, _, fns in os.walk(pdir)
-                    for fn in fns
-                ):
-                    shutil.rmtree(pdir, ignore_errors=True)
-                    removed["partitions"].append(f"{t}/{d}")
-    else:
-        keep_ds = set().union(*[set(m["dataset_uuids"]) for m in markers])
-        for t in PARTITIONED_TABLES:
-            base = os.path.join(out_dir, t)
-            if not os.path.isdir(base):
-                continue
-            for d in os.listdir(base):
-                if d.startswith("dataset=") and d[len("dataset="):] not in keep_ds:
-                    shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-                    removed["partitions"].append(f"{t}/{d}")
+            for entries in m["files"].get(t, {}).values():
+                referenced.update(rel for rel, _ in entries)
+    for t in PARTITIONED_TABLES:
+        base = os.path.join(out_dir, t)
+        if not os.path.isdir(base):
+            continue
+        for dp, _, fns in os.walk(base):
+            for fn in fns:
+                if fn.startswith(("_", ".")):
+                    continue
+                rel = os.path.relpath(os.path.join(dp, fn), out_dir)
+                if rel not in referenced:
+                    os.remove(os.path.join(dp, fn))
+                    removed["files"].append(rel)
+        # prune partition dirs emptied of data files
+        for d in sorted(os.listdir(base)):
+            pdir = os.path.join(base, d)
+            if d.startswith("dataset=") and os.path.isdir(pdir) and not any(
+                not fn.startswith(("_", "."))
+                for _, _, fns in os.walk(pdir)
+                for fn in fns
+            ):
+                shutil.rmtree(pdir, ignore_errors=True)
+                removed["partitions"].append(f"{t}/{d}")
     for t in VERSIONED_TABLES:
         base = os.path.join(out_dir, t)
         keep_v = {m["table_versions"][t] for m in markers}
@@ -767,7 +752,7 @@ def expire_snapshots(out_dir: str, keep_last: int = 2) -> dict:
             removed["commits"].append(v)
     # state v=k is the input that replays batch k (which commits k+1):
     # keep versions >= the oldest retained snapshot's version
-    state_root = os.path.join(out_dir, "_state")
+    state_root = os.path.join(out_dir, STATE_DIR)
     if os.path.isdir(state_root) and retained:
         floor = min(retained)
         for name in os.listdir(state_root):
@@ -899,6 +884,112 @@ def product_stats_from_state(
     }
 
 
+def write_partitions(
+    product: CodexProduct, out_dir: str, *, _fail_after: str | None = None
+) -> dict:
+    """APPEND the product's rows into the three dataset-partitioned
+    tables and return the written files (``{table: {dataset: [[relpath,
+    size], ...]}}``) by pre/post listing diff. Append never rewrites a
+    file, so the diff is exactly this write's output even next to a
+    crashed attempt's orphans (unreferenced by every commit, swept by
+    ``expire_snapshots``), and time travel stays EXACT across
+    remove→re-add: the re-added dataset's files get new names while the
+    old commit keeps resolving the old bytes. Safe under
+    apply_fleet_delta's concurrent per-tissue threads (disjoint
+    directories). ``_fail_after`` names a table to crash after."""
+    frames = {"x_long": product.x_long, "obs": product.obs, "edges": product.edges}
+    datasets = list(product.uns["dataset_uuids"])
+
+    def listing(table: str, ds: str) -> list[list]:
+        return _list_files(os.path.join(out_dir, table, f"dataset={ds}"), out_dir)
+
+    written: dict = {}
+    for table in PARTITIONED_TABLES:
+        pre = {ds: {rel for rel, _ in listing(table, ds)} for ds in datasets}
+        if frames[table] is not None:
+            frames[table].write.mode("append").partitionBy("dataset").parquet(
+                f"{out_dir}/{table}"
+            )
+        written[table] = {
+            ds: [[rel, size] for rel, size in listing(table, ds)
+                 if rel not in pre[ds]]
+            for ds in datasets
+        }
+        _checkpoint(_fail_after, table)
+    return written
+
+
+def write_state(
+    out_dir: str, state: dict[str, DataFrame], version: int
+) -> dict[str, DataFrame]:
+    """Persist the maintenance-state relations at
+    ``_state/<name>/v=<version>`` — a path no committed reader resolves
+    — and return them read back, so the commit stats and the next batch
+    fold the same persisted rows."""
+    root = os.path.join(out_dir, STATE_DIR)
+    persisted: dict[str, DataFrame] = {}
+    for name, df in state.items():
+        path = f"{root}/{name}/v={version}"
+        df.write.mode("overwrite").parquet(path)
+        persisted[name] = df.sparkSession.read.parquet(path)
+    return persisted
+
+
+def commit_snapshot(
+    out_dir: str,
+    uns: dict,
+    version: int,
+    table_versions: dict,
+    stats: dict,
+    partition_files: dict,
+    *,
+    _fail_after: str | None = None,
+) -> dict:
+    """Commit snapshot ``version`` — the one commit path shared by the
+    bootstrap ``write_product`` and every maintenance batch: driver-side
+    dict math over data already written at paths no committed reader
+    resolves, then ``write_commit_marker``. ``partition_files`` (table →
+    dataset → files) may be a superset: the file-level manifest keeps
+    exactly the entries of ``uns["dataset_uuids"]`` plus the files of
+    the axis versions in ``table_versions``. The K2 manifest
+    (create_json, bin/concatenate.py:154-177) takes its cell count from
+    ``stats`` and its size as a dict sum over exactly the committed
+    files. Returns the manifest."""
+    datasets = list(uns["dataset_uuids"])
+    files: dict = {
+        t: {ds: partition_files[t].get(ds, []) for ds in datasets}
+        for t in PARTITIONED_TABLES
+    }
+    for t in VERSIONED_TABLES:
+        files[t] = _list_files(
+            os.path.join(out_dir, t, f"v={table_versions[t]}"), out_dir
+        )
+    manifest = {
+        "Data Product UUID": uns["uuid"],
+        "Tissue": uns.get("tissue"),
+        "Assay": "codex",
+        "Creation Time": uns["creation_data_time"],
+        "Dataset UUIDs": uns["dataset_uuids"],
+        "Dataset HBMIDs": uns["datasets"],
+        "Total Cell Count": stats["obs"]["rows"],
+        "Raw File Size": _files_size(files),
+    }
+    _checkpoint(_fail_after, "manifest")
+    commit = {
+        "uuid": uns["uuid"],
+        "version": version,
+        "tables": list(PRODUCT_TABLES),
+        "dataset_uuids": datasets,
+        "table_versions": table_versions,
+        "uns": uns,
+        "manifest": manifest,
+        "stats": stats,
+        "files": files,
+    }
+    write_commit_marker(out_dir, commit, _fail_after=_fail_after)
+    return manifest
+
+
 def write_product(
     product: CodexProduct,
     out_dir: str,
@@ -906,100 +997,44 @@ def write_product(
     _fail_after: str | None = None,
     stats: dict | None = None,
 ) -> dict:
-    """K1 + K2: parquet product directory + manifest, committed with the
-    marker-LAST protocol: tables (axis tables at their versioned v=0
-    paths) → commit marker carrying uns + manifest + stats. A crash at
-    any point leaves no marker, so readers (through
-    ``read_product_table``) refuse the half-product, and a re-run
-    converges — every table write is mode=overwrite.
+    """K1 + K2: the bootstrap writer — snapshot version 0 of a parquet
+    product directory through the same ``commit_snapshot`` as every
+    maintenance batch: partition files appended, axis tables at ``v=0``,
+    then the marker. A crash at any point leaves no marker, so readers
+    (``read_product_table``) refuse the half-product, and a re-run
+    converges to a committed product naming only its own files.
 
     x_long/obs/edges partitioned by dataset → partition pruning for
     per-dataset consumers AND O(delta) incremental maintenance
     (streaming/product_ivm.py); var/varm_long are channel-grain tables
-    written at ``v=0`` so delta batches can commit ``v=k`` snapshots
-    without ever overwriting a committed reader's files.
+    written at ``v=0`` so maintenance batches can commit ``v=k``
+    snapshots without ever overwriting a committed reader's files.
 
-    Bootstrap writer: writes snapshot version 0 into a NEW directory.
-    Re-running over a LIVE committed product is not reader-safe (the
-    partitioned tables are overwritten in place) — evolve a committed
-    product through ``apply_product_delta`` instead.
+    Writes into a NEW directory. Re-running over a LIVE committed
+    product is not reader-safe (the ``v=0`` axis tables are overwritten
+    in place) — evolve a committed product through
+    ``apply_product_delta`` instead.
 
     ``stats`` lets a caller that already derived the maintenance state
     (``bootstrap_product_maintenance``) pass the commit stats in instead
-    of re-running the state aggregation; ``_fail_after`` is the
-    failure-injection seam for the atomicity test."""
-
-    def _checkpoint(step: str) -> None:
-        if _fail_after == step:
-            raise RuntimeError(f"injected crash after {step}")
-
-    os.makedirs(out_dir, exist_ok=True)
-    product.x_long.write.mode("overwrite").partitionBy("dataset").parquet(
-        f"{out_dir}/x_long"
-    )
-    _checkpoint("x_long")
-    product.obs.write.mode("overwrite").partitionBy("dataset").parquet(
-        f"{out_dir}/obs"
-    )
-    _checkpoint("obs")
+    of re-running the state aggregation; ``_fail_after`` ∈ {x_long, obs,
+    edges, tables, manifest, commit_file} is the failure-injection seam
+    for the atomicity test. Returns the manifest."""
+    files = write_partitions(product, out_dir, _fail_after=_fail_after)
     product.var.write.mode("overwrite").parquet(f"{out_dir}/var/v=0")
     product.varm_long.write.mode("overwrite").parquet(
         f"{out_dir}/varm_long/v=0"
     )
-    if product.edges is not None:
-        product.edges.write.mode("overwrite").partitionBy("dataset").parquet(
-            f"{out_dir}/edges"
-        )
-    _checkpoint("tables")
-
+    _checkpoint(_fail_after, "tables")
     if stats is None:
         state = derive_product_state(product)
         stats = product_stats_from_state(
             state["ds_channels"], state["ds_stats"], product.varm_long
         )
-    table_versions = {"var": 0, "varm_long": 0}
-    # file-level manifest (the Iceberg move, VERDICT r8 #3): the commit
-    # names its exact data files, so historical reads, GC and the size
-    # sum all resolve by file reference, not directory membership
-    datasets = list(product.uns["dataset_uuids"])
-    files: dict = {
-        t: {
-            ds: _list_files(os.path.join(out_dir, t, f"dataset={ds}"), out_dir)
-            for ds in datasets
-        }
-        for t in PARTITIONED_TABLES
-    }
-    for t in VERSIONED_TABLES:
-        files[t] = _list_files(os.path.join(out_dir, t, "v=0"), out_dir)
-    # K2 manifest (create_json, bin/concatenate.py:154-177): cell count
-    # from the commit stats; file size over exactly the committed files.
-    manifest = {
-        "Data Product UUID": product.uns["uuid"],
-        "Tissue": product.uns.get("tissue"),
-        "Assay": "codex",
-        "Creation Time": product.uns["creation_data_time"],
-        "Dataset UUIDs": product.uns["dataset_uuids"],
-        "Dataset HBMIDs": product.uns["datasets"],
-        "Total Cell Count": stats["obs"]["rows"],
-        "Raw File Size": _files_size(files),
-    }
-    _checkpoint("manifest")
-    write_commit_marker(
-        out_dir,
-        {
-            "uuid": product.uns["uuid"],
-            "version": 0,
-            "tables": list(PRODUCT_TABLES),
-            "dataset_uuids": datasets,
-            "table_versions": table_versions,
-            "uns": product.uns,
-            "manifest": manifest,
-            "stats": stats,
-            "files": files,
-        },
+    return commit_snapshot(
+        out_dir, product.uns, 0, {"var": 0, "varm_long": 0}, stats, files,
         _fail_after=_fail_after,
     )
-    return manifest
 
 
 def wide_matrix(product: CodexProduct, layer: str = "total") -> DataFrame:

@@ -44,27 +44,35 @@ identical snapshots):
   * ``ds_varm_raw/v=<k>`` — per-dataset varm rows BEFORE the var
     semi-join.
 
+One fold, one commit: a release batch (``apply_product_delta``: datasets
+added and/or removed) and a metadata batch (``apply_metadata_refresh``:
+an ancestor's antibodies.tsv corrected) run the same ``_apply_batch``.
+What a batch rewrites follows from its contents — partitions only for
+added datasets, ``var`` and the dataset lists only when membership
+changes, and a refresh replaces only its datasets' ``ds_varm_raw``
+rows. Every batch ends in ``plans.codex_pipeline.commit_snapshot``, the
+same commit the bootstrap writer ``write_product`` uses; that module
+alone knows the snapshot format.
+
 Commit protocol (single-writer): EVERY pre-marker write lands at a path
 no committed reader resolves — added datasets' partition files are
 APPENDED under new names and become visible only through the commit's
-FILE-LEVEL MANIFEST (since round 9 each commit names its exact data
-files; ``read_product_table`` loads precisely those), state ``v=k+1``,
-and the axis tables at their own versioned ``var/v=k+1`` /
-``varm_long/v=k+1`` directories (committed readers stay pinned to the
-versions named in the live marker). uns, manifest and table stats
-travel INSIDE the commit file, so no live JSON is overwritten before
-the commit point either. The marker rename is therefore the ONLY
-reader-visible transition: a crash anywhere before it leaves the
-previous committed product byte-intact (property-tested with a failure
-seam at every write step), and the root-level
-``uns.json``/``<uuid>.json`` mirrors are refreshed post-commit. No
-committed file is ever overwritten — removed/re-added datasets write
-NEW files, so time travel is exact at every retained version — and
-nothing is deleted at commit: ``expire_snapshots`` applies
-retention-based file-grain GC afterwards (delete exactly the files no
-retained snapshot references), so a concurrent reader that resolved
-the previous marker can finish its scan without losing files mid-read,
-and historical versions stay readable until expired.
+file-level manifest (``read_product_table`` loads precisely the files a
+commit names), state ``v=k+1``, and the axis tables at their own
+versioned ``var/v=k+1`` / ``varm_long/v=k+1`` directories (committed
+readers stay pinned to the versions named in the live marker). uns,
+manifest and table stats travel INSIDE the commit file, so no live JSON
+is overwritten before the commit point either. The marker rename is
+therefore the ONLY reader-visible transition: a crash anywhere before it
+leaves the previous committed product byte-intact (property-tested with
+a failure seam at every write step, for both batch kinds), and the
+root-level ``uns.json``/``<uuid>.json`` mirrors are refreshed
+post-commit. No committed file is ever overwritten — removed/re-added
+datasets write NEW files, so time travel is exact at every retained
+version — and nothing is deleted at commit: ``expire_snapshots`` applies
+retention-based file-grain GC afterwards, so a concurrent reader that
+resolved the previous marker can finish its scan without losing files
+mid-read, and historical versions stay readable until expired.
 
 Invariants (tests/test_product_ivm.py): after any sequence of
 add/remove batches, every product table equals the from-scratch
@@ -87,31 +95,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from codex_data_products_spark.plans.codex_pipeline import (
+    PARTITIONED_TABLES,
+    STATE_DIR,
     CodexProduct,
-    PRODUCT_TABLES,
-    _files_size,
-    _list_files,
+    _catalog_leaves,
+    _checkpoint,
     build_product,
-    snapshot_files,
+    commit_snapshot,
     derive_product_state,
     expire_snapshots,
     product_stats_from_state,
     read_catalog,
     read_commit_marker,
-    write_commit_marker,
+    write_partitions,
     write_product,
+    write_state,
 )
 from codex_data_products_spark.streaming.merge import read_table
-
-_PARTITIONED = ("x_long", "obs", "edges")  # dataset-partitioned tables
-_DS_CHANNELS_SCHEMA = "dataset string, channel string, n_rows long"
-_DS_STATS_SCHEMA = (
-    "dataset string, hubmap_id string, n_cells long, n_edges long"
-)
-
-
-def _state_root(out_dir: str) -> str:
-    return os.path.join(out_dir, "_state")
 
 
 def bootstrap_product_maintenance(
@@ -123,104 +123,158 @@ def bootstrap_product_maintenance(
     written FIRST (invisible until the marker) and read back, so the
     commit stats come from the same persisted relations the deltas will
     fold — and the state aggregation runs once, not twice."""
-    spark = product.x_long.sparkSession
-    root = _state_root(out_dir)
-    persisted: dict[str, DataFrame] = {}
-    for name, df in derive_product_state(product).items():
-        df.write.mode("overwrite").parquet(f"{root}/{name}/v=0")
-        persisted[name] = spark.read.parquet(f"{root}/{name}/v=0")
+    state = write_state(out_dir, derive_product_state(product), 0)
     stats = product_stats_from_state(
-        persisted["ds_channels"], persisted["ds_stats"], product.varm_long
+        state["ds_channels"], state["ds_stats"], product.varm_long
     )
     return write_product(product, out_dir, stats=stats)
 
 
-def _write_block_partitions(block: CodexProduct, out_dir: str) -> dict:
-    """APPEND the added datasets' partitions into the three dataset-
-    partitioned tables and return the written files per table/dataset
-    (``{table: {dataset: [[relpath, size], ...]}}``) by pre/post
-    listing diff — append never rewrites an existing file, so the diff
-    is exactly this write's output even when a crashed earlier attempt
-    left files in the same partitions (those orphans stay unreferenced
-    by every commit and are swept by ``expire_snapshots``). Appending
-    instead of dynamic-partition-overwrite is what makes time travel
-    EXACT across remove→re-add: the re-added dataset's new files get
-    new names, the old commit's manifest keeps resolving the old bytes
-    until retention expires them. Also trivially safe under
-    apply_fleet_delta's concurrent per-tissue threads — no session-conf
-    juggling, and sibling tissues write disjoint partitions."""
-    frames = {"x_long": block.x_long, "obs": block.obs, "edges": block.edges}
-    datasets = list(block.uns["dataset_uuids"])
-    written: dict = {}
-    for table in _PARTITIONED:
-        df = frames[table]
-        if df is None:
-            written[table] = {ds: [] for ds in datasets}
-            continue
-        pre = {
-            ds: {
-                rel
-                for rel, _ in _list_files(
-                    os.path.join(out_dir, table, f"dataset={ds}"), out_dir
-                )
-            }
-            for ds in datasets
-        }
-        df.write.mode("append").partitionBy("dataset").parquet(
-            f"{out_dir}/{table}"
-        )
-        written[table] = {
-            ds: [
-                [rel, size]
-                for rel, size in _list_files(
-                    os.path.join(out_dir, table, f"dataset={ds}"), out_dir
-                )
-                if rel not in pre[ds]
-            ]
-            for ds in datasets
-        }
-    return written
-
-
-def _commit_snapshot(
+def _apply_batch(
+    spark: SparkSession,
     out_dir: str,
-    uns: dict,
-    version: int,
-    surviving: list[str],
-    table_versions: dict,
-    stats: dict,
-    files: dict,
+    data_dir: str,
+    uuids_tsv: str,
+    batch_id: int,
     *,
+    add: Iterable[str] = (),
+    remove: Iterable[str] = (),
+    refresh: Iterable[str] = (),
+    tissue: str | None = None,
+    tissue_by_uuid: dict[str, str] | None = None,
+    decoder=None,
+    retain_snapshots: int | None = 2,
     _fail_after: str | None = None,
 ) -> dict:
-    """Assemble manifest + commit descriptor (pure driver-side dict math
-    over the already-collected stats and the file-level manifest — the
-    size is a dict sum, no os.walk) and commit. Returns the manifest."""
-    manifest = {
-        "Data Product UUID": uns["uuid"],
-        "Tissue": uns.get("tissue"),
-        "Assay": "codex",
-        "Creation Time": uns["creation_data_time"],
-        "Dataset UUIDs": uns["dataset_uuids"],
-        "Dataset HBMIDs": uns["datasets"],
-        "Total Cell Count": stats["obs"]["rows"],
-        "Raw File Size": _files_size(files),
+    """The one batch fold behind every maintenance entry point: read
+    snapshot + state at v=batch_id, commit v=batch_id+1 through
+    ``commit_snapshot``, then retention GC. Returns the manifest.
+
+    A batch is a release batch (``add``/``remove``) or a metadata batch
+    (``refresh``), never both — the refresh block must not pull in an
+    added dataset's HDF5 scan; an empty batch is the fleet's lockstep
+    no-op commit. Targets are checked against the committed dataset
+    list: added ones must be absent (in-place REPLACE is rejected — the
+    state fold and the file-manifest carry-forward assume no committed
+    contribution yet; replace = remove in one batch, add in the next),
+    removed and refreshed ones present."""
+    from codex_data_products_spark.sources.hdf5 import h5py_decoder
+
+    added = list(dict.fromkeys(add))
+    removed = list(dict.fromkeys(remove))
+    refreshed = list(dict.fromkeys(refresh))
+    if set(added) & set(removed):
+        raise ValueError("a dataset cannot be both added and removed")
+    membership = bool(added or removed)
+    if refreshed and membership:
+        raise ValueError(
+            "a change batch must be release-only (add/remove) or "
+            "metadata-only (refresh) — split them across batches"
+        )
+
+    base = read_commit_marker(out_dir, version=batch_id)
+    uns = dict(base["uns"])
+    committed = set(base["dataset_uuids"])
+    re_added = sorted(set(added) & committed)
+    if re_added:
+        raise ValueError(
+            f"datasets already in the product: {re_added}; remove them "
+            "in a prior batch before re-adding"
+        )
+    missing = [d for d in removed + refreshed if d not in committed]
+    if missing:
+        raise ValueError(f"not in the committed product: {missing}")
+    root = os.path.join(out_dir, STATE_DIR)
+    state = {
+        name: read_table(spark, f"{root}/{name}", version=batch_id)
+        for name in ("ds_channels", "ds_stats", "ds_varm_raw")
     }
-    write_commit_marker(
-        out_dir,
-        {
-            "uuid": uns["uuid"],
-            "version": version,
-            "tables": list(PRODUCT_TABLES),
-            "dataset_uuids": surviving,
-            "table_versions": table_versions,
-            "uns": uns,
-            "manifest": manifest,
-            "stats": stats,
-            "files": files,
-        },
-        _fail_after=_fail_after,
+
+    # -- 1. block-build the added (or refreshed) datasets — per-dataset-
+    #       pure tables are EXACTLY the full build's rows for them — and
+    #       append only the added datasets' partitions. A refresh block
+    #       contributes varm rows only: its plan reads the CSV headers and
+    #       the antibodies TSV, and the HDF5 scan never executes.
+    #       Uncommitted until the marker flips.
+    block = None
+    if added or refreshed:
+        block = build_product(
+            spark, data_dir, uuids_tsv, tissue=tissue or uns.get("tissue"),
+            decoder=decoder or h5py_decoder, tissue_by_uuid=tissue_by_uuid,
+            product_uuid=uns["uuid"], creation_time=uns["creation_data_time"],
+            only_datasets=added or refreshed,
+        )
+    partition_files = base["files"]
+    if added:
+        written = write_partitions(block, out_dir)
+        partition_files = {
+            t: {**base["files"][t], **written[t]} for t in PARTITIONED_TABLES
+        }
+    _checkpoint(_fail_after, "partitions")
+
+    # -- 2. fold the per-dataset state: drop the touched datasets' rows
+    #       and union the block's freshly-derived ones. A membership
+    #       batch replaces whole contributions; a refresh replaces
+    #       ds_varm_raw rows only.
+    fresh = derive_product_state(block) if block is not None else {}
+    touched = added + removed + refreshed
+    folded: dict[str, DataFrame] = {}
+    for name, df in state.items():
+        if membership or name == "ds_varm_raw":
+            df = df.filter(~F.col("dataset").isin(touched))
+            if name in fresh:
+                df = df.unionByName(fresh[name])
+        folded[name] = df
+    v = batch_id + 1
+    state = write_state(out_dir, folded, v)
+    _checkpoint(_fail_after, "state")
+
+    # -- 3. the channel-grain axis tables (tiny: channels x datasets
+    #       rows) at their OWN versioned paths — committed readers stay
+    #       pinned to the marker's versions, so nothing they resolve is
+    #       ever overwritten. var = union of per-dataset surviving sets,
+    #       re-derived only when membership changed (else carried
+    #       forward); varm survivorship against that global axis — the
+    #       one place a block-local view would be wrong.
+    if membership:
+        var_version = v
+        var = state["ds_channels"].select("channel").distinct()
+        var.write.mode("overwrite").parquet(f"{out_dir}/var/v={v}")
+    else:
+        var_version = base["table_versions"]["var"]
+        var = spark.read.parquet(f"{out_dir}/var/v={var_version}")
+    _checkpoint(_fail_after, "var")
+    varm = state["ds_varm_raw"].join(F.broadcast(var), "channel", "left_semi")
+    varm.write.mode("overwrite").parquet(f"{out_dir}/varm_long/v={v}")
+    varm = spark.read.parquet(f"{out_dir}/varm_long/v={v}")
+    _checkpoint(_fail_after, "varm_long")
+
+    # -- 4. uns + stats from the additive state (never a corpus scan):
+    #       on a membership change the dataset lists are re-derived in
+    #       catalog leaf order — identical to what a from-scratch build
+    #       over the surviving set emits.
+    if membership:
+        stats_rows = {r["dataset"]: r for r in state["ds_stats"].collect()}
+        catalog_order = [r["uuid"] for r in _catalog_leaves(spark, uuids_tsv)[1]]
+        surviving = [u for u in catalog_order if u in stats_rows]
+        surviving += sorted(u for u in stats_rows if u not in set(catalog_order))
+        uns["dataset_uuids"] = surviving
+        uns["datasets"] = [stats_rows[u]["hubmap_id"] for u in surviving]
+    stats = product_stats_from_state(
+        state["ds_channels"], state["ds_stats"], varm
     )
+
+    # -- 5. COMMIT POINT (atomic rename), then retention-based GC: the
+    #       removed datasets' partitions and superseded axis/state
+    #       versions outlive this commit until no retained snapshot
+    #       references them (expire_snapshots), so concurrent readers of
+    #       the previous snapshot never lose files mid-scan.
+    manifest = commit_snapshot(
+        out_dir, uns, v, {"var": var_version, "varm_long": v}, stats,
+        partition_files, _fail_after=_fail_after,
+    )
+    if retain_snapshots is not None:
+        expire_snapshots(out_dir, keep_last=retain_snapshots)
     return manifest
 
 
@@ -240,14 +294,13 @@ def apply_product_delta(
     _fail_after: str | None = None,
 ) -> dict:
     """Fold one release batch (datasets added and/or removed) into the
-    committed product: read snapshot + state anchored at v=batch_id,
-    commit v=batch_id+1, touch only the delta's partitions. Returns the
-    updated manifest.
+    committed product: commit v=batch_id+1 touching only the delta's
+    partitions. Returns the updated manifest.
 
     Replay-safe: the snapshot/state reads are anchored to the batch id
     (``read_commit_marker(..., version=batch_id)`` resolves the
     versioned commit file even after this batch's own commit), block
-    builds are deterministic, and every write is an overwrite at a
+    builds are deterministic, and every write lands at a new file or a
     version-addressed path — a crashed batch re-runs to the identical
     committed snapshot.
 
@@ -257,154 +310,11 @@ def apply_product_delta(
     commit_file} is the failure-injection seam: the atomicity property
     (crash before the marker rename ⇒ previous snapshot byte-intact) is
     tested at EVERY write step."""
-    from codex_data_products_spark.sources.hdf5 import h5py_decoder
-
-    def _checkpoint(step: str) -> None:
-        if _fail_after == step:
-            raise RuntimeError(f"injected crash after {step}")
-
-    added = list(dict.fromkeys(add))
-    removed = list(dict.fromkeys(remove))
-    if set(added) & set(removed):
-        raise ValueError("a dataset cannot be both added and removed")
-
-    base = read_commit_marker(out_dir, version=batch_id)
-    uns = dict(base["uns"])
-    root = _state_root(out_dir)
-    ds_channels = read_table(spark, f"{root}/ds_channels", version=batch_id)
-    # In-place REPLACE is rejected: the state fold and the file-manifest
-    # carry-forward both assume an added dataset has no committed
-    # contribution yet. Replace = remove in one batch, add in the next —
-    # each step crash-safe on its own. (Replaying this batch is fine:
-    # the check reads state v=batch_id, which still excludes the
-    # datasets this batch adds.)
-    existing = {
-        r["dataset"]
-        for r in ds_channels.select("dataset").distinct().collect()
-    }
-    re_added = sorted(set(added) & existing)
-    if re_added:
-        raise ValueError(
-            f"datasets already in the product: {re_added}; remove them "
-            "in a prior batch before re-adding"
-        )
-    ds_stats = read_table(spark, f"{root}/ds_stats", version=batch_id)
-    ds_varm_raw = read_table(spark, f"{root}/ds_varm_raw", version=batch_id)
-
-    touched = added + removed
-
-    # -- 1. block-build the added datasets (per-dataset-pure tables are
-    #       EXACTLY the full build's rows for them) and write only their
-    #       partitions. Uncommitted until the marker flips.
-    block = None
-    block_files: dict = {t: {} for t in _PARTITIONED}
-    if added:
-        block = build_product(
-            spark,
-            data_dir,
-            uuids_tsv,
-            tissue=tissue or uns.get("tissue"),
-            decoder=decoder or h5py_decoder,
-            tissue_by_uuid=tissue_by_uuid,
-            product_uuid=uns["uuid"],
-            creation_time=uns["creation_data_time"],
-            only_datasets=added,
-        )
-        block_files = _write_block_partitions(block, out_dir)
-    _checkpoint("partitions")
-
-    # -- 2. fold the per-dataset state: drop touched datasets' rows,
-    #       union the block's freshly-derived rows (re-adding a dataset
-    #       replaces its contribution wholesale).
-    def fold(state: DataFrame, fresh: DataFrame | None) -> DataFrame:
-        kept = state.filter(~F.col("dataset").isin(touched))
-        return kept.unionByName(fresh) if fresh is not None else kept
-
-    block_state = derive_product_state(block) if block is not None else {}
-    new_channels = fold(ds_channels, block_state.get("ds_channels"))
-    new_stats = fold(ds_stats, block_state.get("ds_stats"))
-    new_varm_raw = fold(ds_varm_raw, block_state.get("ds_varm_raw"))
-
-    v = batch_id + 1
-    new_channels.write.mode("overwrite").parquet(f"{root}/ds_channels/v={v}")
-    new_stats.write.mode("overwrite").parquet(f"{root}/ds_stats/v={v}")
-    new_varm_raw.write.mode("overwrite").parquet(f"{root}/ds_varm_raw/v={v}")
-    new_channels = spark.read.parquet(f"{root}/ds_channels/v={v}")
-    new_stats = spark.read.parquet(f"{root}/ds_stats/v={v}")
-    new_varm_raw = spark.read.parquet(f"{root}/ds_varm_raw/v={v}")
-    _checkpoint("state")
-
-    # -- 3. re-derive the channel-grain axis tables from state (tiny:
-    #       channels x datasets rows) at their OWN versioned paths —
-    #       committed readers stay pinned to the marker's versions, so
-    #       nothing they resolve is ever overwritten. var = union of
-    #       per-dataset surviving sets; varm survivorship against the
-    #       NEW global axis — the one place a block-local view would be
-    #       wrong.
-    new_var = new_channels.select("channel").distinct()
-    new_varm = new_varm_raw.join(F.broadcast(new_var), "channel", "left_semi")
-    new_var.write.mode("overwrite").parquet(f"{out_dir}/var/v={v}")
-    _checkpoint("var")
-    new_varm.write.mode("overwrite").parquet(f"{out_dir}/varm_long/v={v}")
-    new_varm = spark.read.parquet(f"{out_dir}/varm_long/v={v}")
-    _checkpoint("varm_long")
-
-    # -- 4. uns + stats from the additive state (never a corpus scan):
-    #       dataset lists in catalog leaf order — identical to what a
-    #       from-scratch build over the surviving set emits.
-    stats_rows = {r["dataset"]: r for r in new_stats.collect()}
-    catalog_order = [
-        r["uuid"]
-        for r in read_catalog(spark, uuids_tsv)
-        .select("uuid", "immediate_descendant_ids")
-        .collect()
-        if r["immediate_descendant_ids"] is None
-    ]
-    surviving = [u for u in catalog_order if u in stats_rows]
-    surviving += sorted(u for u in stats_rows if u not in set(catalog_order))
-    uns["dataset_uuids"] = surviving
-    uns["datasets"] = [stats_rows[u]["hubmap_id"] for u in surviving]
-    stats = product_stats_from_state(new_channels, new_stats, new_varm)
-
-    # file-level manifest for the new snapshot: carried-forward entries
-    # for untouched datasets (their files are immutable), the block's
-    # freshly-appended files for added datasets, removed datasets
-    # dropped, and the new axis versions listed. Pure dict math plus
-    # one listing of the delta's own writes.
-    base_files = snapshot_files(out_dir, base)
-    files: dict = {}
-    for t in _PARTITIONED:
-        files[t] = {
-            ds: base_files.get(t, {}).get(ds, [])
-            for ds in surviving
-            if ds not in set(added)
-        }
-        for ds in added:
-            files[t][ds] = block_files[t].get(ds, [])
-    files["var"] = _list_files(os.path.join(out_dir, "var", f"v={v}"), out_dir)
-    files["varm_long"] = _list_files(
-        os.path.join(out_dir, "varm_long", f"v={v}"), out_dir
+    return _apply_batch(
+        spark, out_dir, data_dir, uuids_tsv, batch_id, add=add, remove=remove,
+        tissue=tissue, tissue_by_uuid=tissue_by_uuid, decoder=decoder,
+        retain_snapshots=retain_snapshots, _fail_after=_fail_after,
     )
-    _checkpoint("manifest")
-
-    # -- 5. COMMIT POINT (atomic rename), then retention-based GC: the
-    #       removed datasets' partitions and superseded axis/state
-    #       versions outlive this commit until no retained snapshot
-    #       references them (expire_snapshots), so concurrent readers of
-    #       the previous snapshot never lose files mid-scan.
-    manifest = _commit_snapshot(
-        out_dir,
-        uns,
-        v,
-        surviving,
-        {"var": v, "varm_long": v},
-        stats,
-        files,
-        _fail_after=_fail_after,
-    )
-    if retain_snapshots is not None:
-        expire_snapshots(out_dir, keep_last=retain_snapshots)
-    return manifest
 
 
 def apply_metadata_refresh(
@@ -417,6 +327,7 @@ def apply_metadata_refresh(
     *,
     decoder=None,
     retain_snapshots: int | None = 2,
+    _fail_after: str | None = None,
 ) -> dict:
     """The second delta class: an ancestor's antibodies.tsv was
     corrected (metadata fix, no expression data changed). Only the varm
@@ -427,68 +338,14 @@ def apply_metadata_refresh(
     reads only the CSV headers and the antibodies TSV; the HDF5
     expression scan is never executed (nothing materializes obs or
     x_long — pinned by test_metadata_refresh_never_decodes_hdf5), and
-    no dataset partition is touched. Returns the manifest."""
-    from codex_data_products_spark.sources.hdf5 import h5py_decoder
-
-    targets = list(dict.fromkeys(datasets))
-    base = read_commit_marker(out_dir, version=batch_id)
-    uns = dict(base["uns"])
-    root = _state_root(out_dir)
-    ds_channels = read_table(spark, f"{root}/ds_channels", version=batch_id)
-    ds_stats = read_table(spark, f"{root}/ds_stats", version=batch_id)
-    ds_varm_raw = read_table(spark, f"{root}/ds_varm_raw", version=batch_id)
-    known = set(base["dataset_uuids"])
-    missing = [d for d in targets if d not in known]
-    if missing:
-        raise ValueError(f"not in the committed product: {missing}")
-
-    block = build_product(
-        spark,
-        data_dir,
-        uuids_tsv,
-        tissue=uns.get("tissue"),
-        decoder=decoder or h5py_decoder,
-        product_uuid=uns["uuid"],
-        creation_time=uns["creation_data_time"],
-        only_datasets=targets,
+    no dataset partition is touched. Same fold, commit, replay contract
+    and ``_fail_after`` seams as ``apply_product_delta``. Returns the
+    manifest."""
+    return _apply_batch(
+        spark, out_dir, data_dir, uuids_tsv, batch_id, refresh=datasets,
+        decoder=decoder, retain_snapshots=retain_snapshots,
+        _fail_after=_fail_after,
     )
-    new_varm_raw = ds_varm_raw.filter(
-        ~F.col("dataset").isin(targets)
-    ).unionByName(block.varm_raw)
-
-    v = batch_id + 1
-    ds_channels.write.mode("overwrite").parquet(f"{root}/ds_channels/v={v}")
-    ds_stats.write.mode("overwrite").parquet(f"{root}/ds_stats/v={v}")
-    new_varm_raw.write.mode("overwrite").parquet(f"{root}/ds_varm_raw/v={v}")
-    new_varm_raw = spark.read.parquet(f"{root}/ds_varm_raw/v={v}")
-    new_channels = spark.read.parquet(f"{root}/ds_channels/v={v}")
-    new_stats = spark.read.parquet(f"{root}/ds_stats/v={v}")
-
-    var_version = base["table_versions"]["var"]
-    var = spark.read.parquet(f"{out_dir}/var/v={var_version}")
-    new_varm = new_varm_raw.join(F.broadcast(var), "channel", "left_semi")
-    new_varm.write.mode("overwrite").parquet(f"{out_dir}/varm_long/v={v}")
-    new_varm = spark.read.parquet(f"{out_dir}/varm_long/v={v}")
-
-    stats = product_stats_from_state(new_channels, new_stats, new_varm)
-    # metadata-only delta: every partitioned file carries forward; only
-    # the varm_long axis version is new
-    files = dict(snapshot_files(out_dir, base))
-    files["varm_long"] = _list_files(
-        os.path.join(out_dir, "varm_long", f"v={v}"), out_dir
-    )
-    manifest = _commit_snapshot(
-        out_dir,
-        uns,
-        v,
-        list(base["dataset_uuids"]),
-        {"var": var_version, "varm_long": v},
-        stats,
-        files,
-    )
-    if retain_snapshots is not None:
-        expire_snapshots(out_dir, keep_last=retain_snapshots)
-    return manifest
 
 
 def run_product_maintenance(
@@ -504,46 +361,25 @@ def run_product_maintenance(
     {'add','remove','refresh'}, dataset string) — 'refresh' is the
     metadata-only delta class (``apply_metadata_refresh``). A batch is
     either a release batch (add/remove) or a metadata batch (refresh),
-    never both: each class bumps the state version once, so mixing them
-    in one batch_id would break the v=k → v=k+1 anchoring. The
-    per-batch collect is catalog-grain (releases touch a handful of
-    datasets), bounded by design.
+    never both (the fold refuses a mix). The per-batch collect is
+    catalog-grain (releases touch a handful of datasets), bounded by
+    design.
 
-    Standard replay contract: a batch anchored to v=batch_id overwrites
-    v=batch_id+1 and its own partitions, so a crash between the commit
-    marker and the checkpoint commit re-derives the same snapshot.
+    Standard replay contract: a batch anchored to v=batch_id rewrites
+    only v=batch_id+1 paths and appends new files, so a crash between
+    the commit marker and the checkpoint commit re-derives the same
+    snapshot.
     """
 
     def fold(batch: DataFrame, batch_id: int) -> None:
         rows = batch.select("op", "dataset").collect()
-        refresh = [r["dataset"] for r in rows if r["op"] == "refresh"]
-        add = [r["dataset"] for r in rows if r["op"] == "add"]
-        remove = [r["dataset"] for r in rows if r["op"] == "remove"]
-        if refresh and (add or remove):
-            raise ValueError(
-                "a change batch must be release-only (add/remove) or "
-                "metadata-only (refresh) — split them across batches"
-            )
-        if refresh:
-            apply_metadata_refresh(
-                batch.sparkSession,
-                out_dir,
-                data_dir,
-                uuids_tsv,
-                batch_id,
-                refresh,
-                decoder=build_kwargs.get("decoder"),
-            )
-            return
-        apply_product_delta(
-            batch.sparkSession,
-            out_dir,
-            data_dir,
-            uuids_tsv,
-            batch_id,
-            add=add,
-            remove=remove,
-            **build_kwargs,
+        targets = {
+            op: [r["dataset"] for r in rows if r["op"] == op]
+            for op in ("add", "remove", "refresh")
+        }
+        _apply_batch(
+            batch.sparkSession, out_dir, data_dir, uuids_tsv, batch_id,
+            **targets, **build_kwargs,
         )
 
     (
@@ -569,8 +405,9 @@ def run_product_maintenance(
 #
 # Anchoring is LOCKSTEP: every tissue — changed or not — commits
 # v=batch_id+1. A no-op tissue's commit folds metadata only (state →
-# state, axis re-derive over channel-grain rows, no HDF5 decode —
-# guarded by test_fleet_delta_noop_tissue_never_decodes; its
+# state, var carried forward, varm_long re-derived over channel-grain
+# rows, no HDF5 decode — guarded by
+# test_fleet_delta_noop_tissue_lockstep_and_no_decode; its
 # dataset-partitioned files stay byte-identical), which keeps the IVM
 # replay contract intact fleet-wide: batch k always reads version k on
 # every product, so a crashed/replayed fleet batch re-derives identical

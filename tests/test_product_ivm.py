@@ -2,12 +2,12 @@
 streaming/product_ivm.py): K-batch delta application must equal the
 from-scratch ``build_product`` + ``write_product`` over the surviving
 dataset set, a replayed batch must be a no-op, a crash before the
-commit marker — at EVERY write step of the delta — must leave the
-previous snapshot byte-intact (full-snapshot comparison: all five
-tables + uns + manifest), untouched datasets' partition files must
-never be rewritten, historical snapshots stay readable (time travel)
-until retention expires them, and the commit-time stats feed
-``plan_join`` without a stats job.
+commit marker — at EVERY write step of a delta or a metadata refresh —
+must leave the previous snapshot byte-intact (full-snapshot
+comparison: all five tables + uns + manifest), untouched datasets'
+partition files must never be rewritten, historical snapshots stay
+readable (time travel) until retention expires them, and the
+commit-time stats feed ``plan_join`` without a stats job.
 
 The bundle is the production-shaped stress generator
 (tools/codex_stress.py) at miniature size: real minihdf5 expression
@@ -35,6 +35,7 @@ from codex_data_products_spark.plans.codex_pipeline import (
     write_product,
 )
 from codex_data_products_spark.streaming.product_ivm import (
+    apply_metadata_refresh,
     apply_product_delta,
     bootstrap_product_maintenance,
     run_product_maintenance,
@@ -218,14 +219,35 @@ def test_time_travel_reads_previous_snapshot(spark, bundle, maintained):
 
 _DELTA_STEPS = ["partitions", "state", "var", "varm_long", "manifest",
                 "commit_file"]
+# batch kind -> (batch call, surviving datasets); the delta cases keep
+# the bare step as their id
+_BATCHES = {
+    "delta": (
+        lambda spark, out, data, cat, **kw: apply_product_delta(
+            spark, out, data, cat, 0, add=[DS[2]], remove=[DS[1]], **kw
+        ),
+        [DS[0], DS[2]],
+    ),
+    "refresh": (
+        lambda spark, out, data, cat, **kw: apply_metadata_refresh(
+            spark, out, data, cat, 0, [DS[0]], **kw
+        ),
+        DS[:2],
+    ),
+}
 
 
-@pytest.mark.parametrize("step", _DELTA_STEPS)
+@pytest.mark.parametrize(
+    "kind, step",
+    [pytest.param("delta", s, id=s) for s in _DELTA_STEPS]
+    + [pytest.param("refresh", s, id=f"refresh-{s}") for s in _DELTA_STEPS],
+)
 def test_crash_at_every_write_step_keeps_previous_snapshot(
-    spark, bundle, tmp_path, step
+    spark, bundle, tmp_path, kind, step
 ):
-    """The atomicity property, at EVERY write step of the delta: a
-    batch that dies before the marker rename leaves the PREVIOUS
+    """The atomicity property, at EVERY write step of both batch kinds
+    (release delta and metadata refresh share one fold and one commit):
+    a batch that dies before the marker rename leaves the PREVIOUS
     committed snapshot byte-intact — ALL five tables, uns, and manifest
     (the round-7 hole was exactly that var/varm_long/uns were
     overwritten in place pre-marker and only x_long/obs were asserted).
@@ -233,21 +255,20 @@ def test_crash_at_every_write_step_keeps_previous_snapshot(
     out = str(tmp_path / "product")
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
+    run_batch, surviving = _BATCHES[kind]
     bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
     base = _snapshot_product(spark, out)
 
     with pytest.raises(RuntimeError, match=f"injected crash after {step}"):
-        apply_product_delta(
-            spark, out, data, cat, 0,
-            add=[DS[2]], remove=[DS[1]], _fail_after=step,
-        )
+        run_batch(spark, out, data, cat, _fail_after=step)
     assert read_commit_marker(out)["version"] == 0
     assert _snapshot_product(spark, out) == base
 
     # replaying the batch converges to the from-scratch result
-    apply_product_delta(spark, out, data, cat, 0, add=[DS[2]], remove=[DS[1]])
+    run_batch(spark, out, data, cat)
+    assert read_commit_marker(out)["version"] == 1
     _assert_equals_from_scratch(
-        spark, bundle, out, [DS[0], DS[2]], tmp_path, "recovered"
+        spark, bundle, out, surviving, tmp_path, "recovered"
     )
 
 
@@ -257,7 +278,7 @@ def test_crash_at_marker_rename_keeps_previous_snapshot(
     """Same property with the crash at the commit call itself (the
     marker rename never happens): the added dataset's partitions are on
     disk but invisible to committed reads, and the re-run converges."""
-    import codex_data_products_spark.streaming.product_ivm as ivm
+    import codex_data_products_spark.plans.codex_pipeline as cp
 
     out = str(tmp_path / "product")
     data = os.path.join(bundle, "data")
@@ -268,7 +289,7 @@ def test_crash_at_marker_rename_keeps_previous_snapshot(
     def boom(*a, **k):
         raise RuntimeError("injected crash before commit")
 
-    monkeypatch.setattr(ivm, "write_commit_marker", boom)
+    monkeypatch.setattr(cp, "write_commit_marker", boom)
     with pytest.raises(RuntimeError, match="injected"):
         apply_product_delta(spark, out, data, cat, 0, add=[DS[1]])
     monkeypatch.undo()
@@ -397,29 +418,67 @@ def test_commit_stats_feed_plan_join_without_a_stats_job(
     assert joined.count() == x.count()  # var keys cover surviving x rows
 
 
-def test_streaming_drain_applies_change_feed(spark, bundle, tmp_path):
-    """The foreachBatch drain: a change-feed file stream with one
-    availableNow batch (add DS[1], remove none) lands the same product
-    as the direct apply."""
-    out = str(tmp_path / "product")
-    src = str(tmp_path / "changes")
-    ckpt = str(tmp_path / "ckpt")
-    data = os.path.join(bundle, "data")
-    cat = os.path.join(bundle, "uuids.tsv")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:1]), out)
-
-    spark.createDataFrame(
-        [("add", DS[1])], "op string, dataset string"
-    ).coalesce(1).write.parquet(f"{src}/d1")
+def _drain(spark, tmp_path, tag, rows, out, data, cat):
+    """One availableNow foreachBatch drain of ``rows`` (op, dataset)
+    through a fresh change-feed directory and checkpoint."""
+    src = str(tmp_path / f"changes_{tag}")
+    spark.createDataFrame(rows, "op string, dataset string").coalesce(
+        1
+    ).write.parquet(f"{src}/d1")
     changes = (
         spark.readStream.schema("op string, dataset string")
         .option("recursiveFileLookup", "true")
         .parquet(src)
     )
-    run_product_maintenance(changes, out, data, cat, ckpt)
+    run_product_maintenance(
+        changes, out, data, cat, str(tmp_path / f"ckpt_{tag}")
+    )
+
+
+def test_streaming_drain_applies_change_feed(spark, bundle, tmp_path):
+    """The foreachBatch drain: a change-feed file stream with one
+    availableNow batch lands the same product as the direct apply —
+    for a release batch (add DS[1], remove none), and for a metadata
+    batch (refresh DS[0] after its antibodies.tsv was corrected), which
+    must equal ``apply_metadata_refresh``. A batch mixing add and
+    refresh is refused."""
+    import shutil
+
+    out = str(tmp_path / "product")
+    data = os.path.join(bundle, "data")
+    cat = os.path.join(bundle, "uuids.tsv")
+    bootstrap_product_maintenance(_build(spark, bundle, DS[:1]), out)
+    _drain(spark, tmp_path, "add", [("add", DS[1])], out, data, cat)
     _assert_equals_from_scratch(
         spark, bundle, out, DS[:2], tmp_path, "stream"
     )
+
+    b2 = str(tmp_path / "bundle2")
+    shutil.copytree(bundle, b2)
+    data2, cat2 = os.path.join(b2, "data"), os.path.join(b2, "uuids.tsv")
+    tsv = os.path.join(data2, codex_stress._ancestor_uuid(0), "foo-antibodies.tsv")
+    with open(tsv) as f:
+        content = f.read()
+    with open(tsv, "w") as f:
+        f.write(content.replace("P12830", "P99999"))
+    streamed, direct = str(tmp_path / "streamed"), str(tmp_path / "direct")
+    for d in (streamed, direct):
+        bootstrap_product_maintenance(_build(spark, b2, DS[:2]), d)
+    _drain(spark, tmp_path, "refresh", [("refresh", DS[0])], streamed, data2, cat2)
+    apply_metadata_refresh(spark, direct, data2, cat2, 0, [DS[0]])
+    assert _snapshot_product(spark, streamed) == _snapshot_product(
+        spark, direct
+    )
+    assert any("P99999" in str(r) for r in _table_rows(spark, streamed, "varm_long"))
+    for key in ("version", "table_versions", "dataset_uuids"):
+        assert read_commit_marker(streamed)[key] == read_commit_marker(direct)[key]
+
+    with pytest.raises(Exception, match="release-only"):
+        _drain(
+            spark, tmp_path, "mixed", [("add", DS[2]), ("refresh", DS[0])],
+            streamed, data2, cat2,
+        )
+    assert read_commit_marker(streamed)["version"] == 1
 
 
 def test_write_product_crash_atomicity(spark, bundle, tmp_path):
@@ -548,10 +607,6 @@ def test_metadata_refresh_never_decodes_hdf5(spark, bundle, tmp_path):
     build over the corrected bundle. The var axis version is CARRIED
     FORWARD (the refresh commits a new varm_long version only)."""
     import shutil
-
-    from codex_data_products_spark.streaming.product_ivm import (
-        apply_metadata_refresh,
-    )
 
     b2 = str(tmp_path / "bundle2")
     shutil.copytree(bundle, b2)
@@ -683,3 +738,79 @@ def test_expire_keeps_files_shared_by_retained_snapshots(
 
     live = read_commit_marker(out)
     assert live["manifest"]["Raw File Size"] == _files_size(live["files"])
+
+
+def test_add_of_dataset_with_no_surviving_channels_is_rejected(
+    spark, bundle, tmp_path
+):
+    """The replace check reads the committed dataset list, not the
+    channel state: a dataset whose channels are all filtered out (only
+    blank / Channel:N:N names) has no ds_channels rows, yet it is in the
+    product and must not be re-added in place."""
+    import shutil
+
+    b2 = str(tmp_path / "bundle2")
+    shutil.copytree(bundle, b2)
+    data, cat = os.path.join(b2, "data"), os.path.join(b2, "uuids.tsv")
+    ds_dir = os.path.join(data, DS[1])
+    csv = next(f for f in os.listdir(ds_dir) if f.endswith("_total.csv"))
+    with open(os.path.join(ds_dir, csv)) as f:
+        header, row = f.read().splitlines()[:2]
+    n = len(header.split(",")) - 1
+    names = [f"blank{j}" if j % 2 else f"Channel:1:{j}" for j in range(n)]
+    with open(os.path.join(ds_dir, csv), "w") as f:
+        f.write("ID," + ",".join(names) + "\n" + row + "\n")
+
+    out = str(tmp_path / "product")
+    bootstrap_product_maintenance(_build(spark, b2, DS[:2]), out)
+    assert DS[1] in read_commit_marker(out)["dataset_uuids"]
+    assert read_product_table(spark, out, "x_long").filter(
+        f"dataset = '{DS[1]}'"
+    ).count() == 0
+    with pytest.raises(ValueError, match="already in the product"):
+        apply_product_delta(spark, out, data, cat, 0, add=[DS[1]])
+    assert read_commit_marker(out)["version"] == 0
+
+
+def test_remove_of_dataset_not_in_product_is_rejected(
+    spark, bundle, tmp_path
+):
+    """Removing a dataset the committed snapshot does not hold raises
+    instead of committing a no-op version (as the refresh and the fleet
+    path already do)."""
+    out = str(tmp_path / "product")
+    data = os.path.join(bundle, "data")
+    cat = os.path.join(bundle, "uuids.tsv")
+    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    with pytest.raises(ValueError, match="not in the committed product"):
+        apply_product_delta(spark, out, data, cat, 0, remove=[DS[3]])
+    with pytest.raises(ValueError, match="not in the committed product"):
+        apply_metadata_refresh(spark, out, data, cat, 0, [DS[3]])
+    assert read_commit_marker(out)["version"] == 0
+    assert not os.path.exists(f"{out}/_commits/v=1.json")
+
+
+def test_marker_without_file_manifest_is_refused(spark, bundle, tmp_path):
+    """A commit descriptor with no 'files' manifest is refused with a
+    rebuild hint by every path that resolves a snapshot — reads,
+    maintenance batches and retention GC — instead of failing on a
+    KeyError deep inside one of them."""
+    out = str(tmp_path / "product")
+    bootstrap_product_maintenance(_build(spark, bundle, DS[:1]), out)
+    for path in (f"{out}/{COMMIT_MARKER}", f"{out}/_commits/v=0.json"):
+        with open(path) as f:
+            commit = json.load(f)
+        del commit["files"]
+        with open(path, "w") as f:
+            json.dump(commit, f)
+    with pytest.raises(ValueError, match="rebuild"):
+        read_product_table(spark, out, "x_long")
+    with pytest.raises(ValueError, match="rebuild"):
+        read_manifest(out)
+    with pytest.raises(ValueError, match="rebuild"):
+        expire_snapshots(out)
+    with pytest.raises(ValueError, match="rebuild"):
+        apply_product_delta(
+            spark, out, os.path.join(bundle, "data"),
+            os.path.join(bundle, "uuids.tsv"), 0, add=[DS[1]],
+        )
