@@ -20,6 +20,7 @@ from __future__ import annotations
 import importlib.util
 import json
 import os
+import shutil
 
 import pytest
 
@@ -60,6 +61,47 @@ def bundle(tmp_path_factory):
     return out
 
 
+@pytest.fixture(scope="module")
+def bootstrapped(spark, bundle, tmp_path_factory):
+    """``copy(datasets, dest)`` puts at ``dest`` a private copy of the
+    product bootstrapped over ``datasets`` of the module bundle (built
+    once per dataset list; the layout holds only relative paths) and
+    returns the committed snapshot it starts from."""
+    root = tmp_path_factory.mktemp("ivm_bootstrap")
+    built = {}
+
+    def copy(datasets, dest):
+        key = tuple(datasets)
+        if key not in built:
+            src = str(root / f"p{len(built)}")
+            bootstrap_product_maintenance(_build(spark, bundle, datasets), src)
+            built[key] = (src, _snapshot_product(spark, src))
+        src, snap = built[key]
+        shutil.copytree(src, dest)
+        return snap
+
+    return copy
+
+
+@pytest.fixture(scope="module")
+def from_scratch(spark, bundle, tmp_path_factory):
+    """``snap(datasets)``: the full snapshot of the from-scratch
+    ``build_product`` + ``write_product`` over ``datasets`` of the
+    module bundle (built once per dataset list)."""
+    root = tmp_path_factory.mktemp("ivm_fresh")
+    snaps = {}
+
+    def snap(datasets):
+        key = tuple(datasets)
+        if key not in snaps:
+            fresh_dir = str(root / f"f{len(snaps)}")
+            write_product(_build(spark, bundle, datasets), fresh_dir)
+            snaps[key] = _snapshot_product(spark, fresh_dir)
+        return snaps[key]
+
+    return snap
+
+
 def _build(spark, bundle, datasets):
     return build_product(
         spark,
@@ -95,12 +137,8 @@ def _snapshot_product(spark, out_dir, version=None):
     return snap
 
 
-def _assert_equals_from_scratch(spark, bundle, out_dir, datasets, tmp, tag):
-    fresh_dir = str(tmp / f"fresh_{tag}")
-    write_product(_build(spark, bundle, datasets), fresh_dir)
-    got, want = _snapshot_product(spark, out_dir), _snapshot_product(
-        spark, fresh_dir
-    )
+def _assert_equals_from_scratch(spark, from_scratch, out_dir, datasets, tag):
+    got, want = _snapshot_product(spark, out_dir), from_scratch(datasets)
     for key in got:
         assert got[key] == want[key], f"{tag}: {key} diverged"
 
@@ -117,12 +155,12 @@ def _part_files(out_dir, table, dataset):
 
 
 @pytest.fixture(scope="module")
-def maintained(spark, bundle, tmp_path_factory):
+def maintained(spark, bundle, bootstrapped, tmp_path_factory):
     """Bootstrap on {0,1}, then three delta batches ending at
-    {2,3,4,5}; yields (product_dir, shared tmp dir)."""
-    tmp = tmp_path_factory.mktemp("ivm_runs")
-    out = str(tmp / "product")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    {2,3,4,5}; yields (product_dir, DS[0]'s partition files before and
+    after batch 0)."""
+    out = str(tmp_path_factory.mktemp("ivm_runs") / "product")
+    bootstrapped(DS[:2], out)
 
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
@@ -141,15 +179,15 @@ def maintained(spark, bundle, tmp_path_factory):
     apply_product_delta(
         spark, out, data, cat, 2, add=[DS[5]], remove=[DS[0]]
     )
-    return out, tmp, before, after
+    return out, before, after
 
 
 def test_three_batch_maintenance_equals_from_scratch(
-    spark, bundle, maintained
+    spark, from_scratch, maintained
 ):
-    out, tmp, _, _ = maintained
+    out, _, _ = maintained
     _assert_equals_from_scratch(
-        spark, bundle, out, [DS[2], DS[3], DS[4], DS[5]], tmp, "final"
+        spark, from_scratch, out, [DS[2], DS[3], DS[4], DS[5]], "final"
     )
     assert read_commit_marker(out)["version"] == 3
 
@@ -160,7 +198,7 @@ def test_untouched_partition_files_never_rewritten(maintained):
     partitioned tables must be byte-identical (same paths, sizes AND
     mtimes — dynamic partition overwrite replaced only the touched
     partitions)."""
-    _, _, before, after = maintained
+    _, before, after = maintained
     for table in ("x_long", "obs", "edges"):
         assert before[table] == after[table], table
         assert before[table], f"{table}: expected files for DS[0]"
@@ -172,7 +210,7 @@ def test_replayed_batch_is_idempotent(spark, bundle, maintained):
     snapshot — even though batch 2 already committed, because the
     snapshot read is anchored to the versioned commit file, not the
     live marker."""
-    out, _, _, _ = maintained
+    out, _, _ = maintained
     want = _snapshot_product(spark, out)
     apply_product_delta(
         spark,
@@ -192,7 +230,7 @@ def test_time_travel_reads_previous_snapshot(spark, bundle, maintained):
     marker at v=3 ({2,3,4,5}), version=2 still reads the {0,2,3,4}
     product — axis tables from their pinned v=2 paths, partitions gated
     on commit v=2's dataset list."""
-    out, _, _, _ = maintained
+    out, _, _ = maintained
     old = _snapshot_product(spark, out, version=2)
     want_ds = sorted([DS[0], DS[2], DS[3], DS[4]])
     assert sorted(old["uns_datasets"][0]) == want_ds
@@ -243,7 +281,7 @@ _BATCHES = {
     + [pytest.param("refresh", s, id=f"refresh-{s}") for s in _DELTA_STEPS],
 )
 def test_crash_at_every_write_step_keeps_previous_snapshot(
-    spark, bundle, tmp_path, kind, step
+    spark, bundle, bootstrapped, from_scratch, tmp_path, kind, step
 ):
     """The atomicity property, at EVERY write step of both batch kinds
     (release delta and metadata refresh share one fold and one commit):
@@ -256,8 +294,7 @@ def test_crash_at_every_write_step_keeps_previous_snapshot(
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
     run_batch, surviving = _BATCHES[kind]
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
-    base = _snapshot_product(spark, out)
+    base = bootstrapped(DS[:2], out)
 
     with pytest.raises(RuntimeError, match=f"injected crash after {step}"):
         run_batch(spark, out, data, cat, _fail_after=step)
@@ -268,12 +305,12 @@ def test_crash_at_every_write_step_keeps_previous_snapshot(
     run_batch(spark, out, data, cat)
     assert read_commit_marker(out)["version"] == 1
     _assert_equals_from_scratch(
-        spark, bundle, out, surviving, tmp_path, "recovered"
+        spark, from_scratch, out, surviving, "recovered"
     )
 
 
 def test_crash_at_marker_rename_keeps_previous_snapshot(
-    spark, bundle, tmp_path, monkeypatch
+    spark, bundle, bootstrapped, from_scratch, tmp_path, monkeypatch
 ):
     """Same property with the crash at the commit call itself (the
     marker rename never happens): the added dataset's partitions are on
@@ -283,8 +320,7 @@ def test_crash_at_marker_rename_keeps_previous_snapshot(
     out = str(tmp_path / "product")
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:1]), out)
-    base = _snapshot_product(spark, out)
+    base = bootstrapped(DS[:1], out)
 
     def boom(*a, **k):
         raise RuntimeError("injected crash before commit")
@@ -304,11 +340,13 @@ def test_crash_at_marker_rename_keeps_previous_snapshot(
     # replaying the batch converges to the from-scratch result
     apply_product_delta(spark, out, data, cat, 0, add=[DS[1]])
     _assert_equals_from_scratch(
-        spark, bundle, out, DS[:2], tmp_path, "recovered"
+        spark, from_scratch, out, DS[:2], "recovered"
     )
 
 
-def test_removal_retracts_private_channels_from_var(spark, bundle, tmp_path):
+def test_removal_retracts_private_channels_from_var(
+    spark, bundle, bootstrapped, tmp_path
+):
     """Removing a dataset retracts its private channels from the var
     axis and its varm rows — the cross-dataset retraction case. The
     removed partitions OUTLIVE the commit (retention keeps the previous
@@ -317,7 +355,7 @@ def test_removal_retracts_private_channels_from_var(spark, bundle, tmp_path):
     out = str(tmp_path / "product")
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    bootstrapped(DS[:2], out)
     var0 = {r["channel"] for r in read_product_table(spark, out, "var").collect()}
     assert any(c.startswith("PRIV1_") for c in var0)
 
@@ -342,7 +380,9 @@ def test_removal_retracts_private_channels_from_var(spark, bundle, tmp_path):
     assert read_product_table(spark, out, "x_long").count() > 0
 
 
-def test_concurrent_reader_survives_delta_commit(spark, bundle, tmp_path):
+def test_concurrent_reader_survives_delta_commit(
+    spark, bundle, bootstrapped, tmp_path
+):
     """A reader that resolved the marker BEFORE a delta commits (and
     removes a dataset) can still finish its scan: retention keeps every
     file its snapshot references — nothing it resolved is overwritten
@@ -351,7 +391,7 @@ def test_concurrent_reader_survives_delta_commit(spark, bundle, tmp_path):
     out = str(tmp_path / "product")
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    bootstrapped(DS[:2], out)
     # reader opens snapshot v=0 (plans pinned to v=0 axis paths + the
     # v=0 dataset list) but does NOT execute yet
     reader_x = read_product_table(spark, out, "x_long")
@@ -367,12 +407,14 @@ def test_concurrent_reader_survives_delta_commit(spark, bundle, tmp_path):
     assert reader_x.filter(f"dataset = '{DS[1]}'").count() > 0
 
 
-def test_mirror_files_match_committed_snapshot(spark, bundle, tmp_path):
+def test_mirror_files_match_committed_snapshot(
+    spark, bundle, bootstrapped, tmp_path
+):
     """The root-level uns.json and <uuid>.json are post-commit mirrors
     of the marker's canonical content (reference-parity files,
     bin/concatenate.py:454-468)."""
     out = str(tmp_path / "product")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    bootstrapped(DS[:2], out)
     apply_product_delta(
         spark, out, os.path.join(bundle, "data"),
         os.path.join(bundle, "uuids.tsv"), 0, add=[DS[2]],
@@ -384,7 +426,7 @@ def test_mirror_files_match_committed_snapshot(spark, bundle, tmp_path):
 
 
 def test_commit_stats_feed_plan_join_without_a_stats_job(
-    spark, bundle, tmp_path
+    spark, bootstrapped, tmp_path
 ):
     """VERDICT r7 #7: the marker carries per-table stats, and
     estimate_from_stats + plan_join pick BROADCAST for the x_long ⋈ var
@@ -397,7 +439,7 @@ def test_commit_stats_feed_plan_join_without_a_stats_job(
     )
 
     out = str(tmp_path / "product")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    bootstrapped(DS[:2], out)
     stats = product_table_stats(out)
     # exact values, persisted additively at commit
     x = read_product_table(spark, out, "x_long")
@@ -435,22 +477,22 @@ def _drain(spark, tmp_path, tag, rows, out, data, cat):
     )
 
 
-def test_streaming_drain_applies_change_feed(spark, bundle, tmp_path):
+def test_streaming_drain_applies_change_feed(
+    spark, bundle, bootstrapped, from_scratch, tmp_path
+):
     """The foreachBatch drain: a change-feed file stream with one
     availableNow batch lands the same product as the direct apply —
     for a release batch (add DS[1], remove none), and for a metadata
     batch (refresh DS[0] after its antibodies.tsv was corrected), which
     must equal ``apply_metadata_refresh``. A batch mixing add and
     refresh is refused."""
-    import shutil
-
     out = str(tmp_path / "product")
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:1]), out)
+    bootstrapped(DS[:1], out)
     _drain(spark, tmp_path, "add", [("add", DS[1])], out, data, cat)
     _assert_equals_from_scratch(
-        spark, bundle, out, DS[:2], tmp_path, "stream"
+        spark, from_scratch, out, DS[:2], "stream"
     )
 
     b2 = str(tmp_path / "bundle2")
@@ -462,8 +504,8 @@ def test_streaming_drain_applies_change_feed(spark, bundle, tmp_path):
     with open(tsv, "w") as f:
         f.write(content.replace("P12830", "P99999"))
     streamed, direct = str(tmp_path / "streamed"), str(tmp_path / "direct")
-    for d in (streamed, direct):
-        bootstrap_product_maintenance(_build(spark, b2, DS[:2]), d)
+    bootstrap_product_maintenance(_build(spark, b2, DS[:2]), streamed)
+    shutil.copytree(streamed, direct)
     _drain(spark, tmp_path, "refresh", [("refresh", DS[0])], streamed, data2, cat2)
     apply_metadata_refresh(spark, direct, data2, cat2, 0, [DS[0]])
     assert _snapshot_product(spark, streamed) == _snapshot_product(
@@ -498,7 +540,9 @@ def test_write_product_crash_atomicity(spark, bundle, tmp_path):
     assert read_product_table(spark, out, "x_long").count() > 0
 
 
-def test_in_place_replace_is_rejected(spark, bundle, tmp_path):
+def test_in_place_replace_is_rejected(
+    spark, bundle, bootstrapped, from_scratch, tmp_path
+):
     """Dynamic partition overwrite only touches partitions present in
     the new block, so re-adding a live dataset could silently keep a
     stale partition (e.g. old edges) — the maintainer rejects it and
@@ -506,17 +550,17 @@ def test_in_place_replace_is_rejected(spark, bundle, tmp_path):
     out = str(tmp_path / "product")
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    bootstrapped(DS[:2], out)
     with pytest.raises(ValueError, match="already in the product"):
         apply_product_delta(spark, out, data, cat, 0, add=[DS[1]])
     # remove then add in separate batches works
     apply_product_delta(spark, out, data, cat, 0, remove=[DS[1]])
     apply_product_delta(spark, out, data, cat, 1, add=[DS[1]])
-    _assert_equals_from_scratch(spark, bundle, out, DS[:2], tmp_path, "readd")
+    _assert_equals_from_scratch(spark, from_scratch, out, DS[:2], "readd")
 
 
 def test_committed_read_scans_exactly_the_manifest_files(
-    spark, bundle, tmp_path
+    spark, bootstrapped, tmp_path
 ):
     """read_product_table's marker gating on the dataset-partitioned
     tables is planning-time FILE SELECTION (round 9: the commit's
@@ -527,7 +571,7 @@ def test_committed_read_scans_exactly_the_manifest_files(
     from pyspark.sql import functions as F
 
     out = str(tmp_path / "product")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    bootstrapped(DS[:2], out)
     # plant an orphan data file inside a committed partition dir (what
     # a crashed append attempt leaves behind) — a dir-scan would read it
     part = f"{out}/x_long/dataset={DS[0]}"
@@ -535,8 +579,6 @@ def test_committed_read_scans_exactly_the_manifest_files(
         fn for fn in os.listdir(part)
         if not fn.startswith(("_", "."))
     )
-    import shutil
-
     shutil.copy(
         os.path.join(part, src), os.path.join(part, "part-orphan.parquet")
     )
@@ -563,7 +605,7 @@ def test_committed_read_scans_exactly_the_manifest_files(
 
 
 def test_manifest_size_excludes_state_and_unreferenced_files(
-    spark, bundle, tmp_path
+    spark, bundle, bootstrapped, tmp_path
 ):
     """ADVICE r7: 'Raw File Size' must cover exactly the committed
     snapshot's files — not the _state version history (which grows with
@@ -574,7 +616,7 @@ def test_manifest_size_excludes_state_and_unreferenced_files(
     cat = os.path.join(bundle, "uuids.tsv")
     from codex_data_products_spark.plans.codex_pipeline import _files_size
 
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    bootstrapped(DS[:2], out)
     apply_product_delta(spark, out, data, cat, 0, add=[DS[2]], remove=[DS[1]])
     size_after_batch = read_manifest(out)["Raw File Size"]
 
@@ -606,8 +648,6 @@ def test_metadata_refresh_never_decodes_hdf5(spark, bundle, tmp_path):
     touching any dataset partition; the result equals a from-scratch
     build over the corrected bundle. The var axis version is CARRIED
     FORWARD (the refresh commits a new varm_long version only)."""
-    import shutil
-
     b2 = str(tmp_path / "bundle2")
     shutil.copytree(bundle, b2)
     out = str(tmp_path / "product")
@@ -664,7 +704,7 @@ def test_metadata_refresh_never_decodes_hdf5(spark, bundle, tmp_path):
 
 
 def test_time_travel_exact_across_remove_then_readd(
-    spark, bundle, tmp_path
+    spark, bundle, bootstrapped, from_scratch, tmp_path
 ):
     """Round-9 file-level manifests: remove a dataset, then RE-ADD it
     (new files appended — nothing overwritten), and every retained
@@ -675,7 +715,7 @@ def test_time_travel_exact_across_remove_then_readd(
     out = str(tmp_path / "product")
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    bootstrapped(DS[:2], out)
     apply_product_delta(
         spark, out, data, cat, 0, remove=[DS[1]], retain_snapshots=None
     )
@@ -683,11 +723,7 @@ def test_time_travel_exact_across_remove_then_readd(
         spark, out, data, cat, 1, add=[DS[1]], retain_snapshots=None
     )
 
-    fresh = {}
-    for tag, ds in (("both", DS[:2]), ("solo", DS[:1])):
-        fdir = str(tmp_path / f"fresh_{tag}")
-        write_product(_build(spark, bundle, ds), fdir)
-        fresh[tag] = _snapshot_product(spark, fdir)
+    fresh = {"both": from_scratch(DS[:2]), "solo": from_scratch(DS[:1])}
     # v=0 (pre-remove) and v=2 (post-re-add) carry the same dataset set
     # but DIFFERENT file generations — both must be exact
     assert _snapshot_product(spark, out, version=0) == fresh["both"]
@@ -702,7 +738,7 @@ def test_time_travel_exact_across_remove_then_readd(
 
 
 def test_expire_keeps_files_shared_by_retained_snapshots(
-    spark, bundle, tmp_path
+    spark, bundle, bootstrapped, tmp_path
 ):
     """File-grain GC: a data file referenced by TWO retained snapshots
     (an untouched dataset across a delta) survives expiry; files only
@@ -711,7 +747,7 @@ def test_expire_keeps_files_shared_by_retained_snapshots(
     out = str(tmp_path / "product")
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    bootstrapped(DS[:2], out)
     apply_product_delta(
         spark, out, data, cat, 0, remove=[DS[1]], retain_snapshots=None
     )
@@ -747,8 +783,6 @@ def test_add_of_dataset_with_no_surviving_channels_is_rejected(
     channel state: a dataset whose channels are all filtered out (only
     blank / Channel:N:N names) has no ds_channels rows, yet it is in the
     product and must not be re-added in place."""
-    import shutil
-
     b2 = str(tmp_path / "bundle2")
     shutil.copytree(bundle, b2)
     data, cat = os.path.join(b2, "data"), os.path.join(b2, "uuids.tsv")
@@ -773,7 +807,7 @@ def test_add_of_dataset_with_no_surviving_channels_is_rejected(
 
 
 def test_remove_of_dataset_not_in_product_is_rejected(
-    spark, bundle, tmp_path
+    spark, bundle, bootstrapped, tmp_path
 ):
     """Removing a dataset the committed snapshot does not hold raises
     instead of committing a no-op version (as the refresh and the fleet
@@ -781,7 +815,7 @@ def test_remove_of_dataset_not_in_product_is_rejected(
     out = str(tmp_path / "product")
     data = os.path.join(bundle, "data")
     cat = os.path.join(bundle, "uuids.tsv")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:2]), out)
+    bootstrapped(DS[:2], out)
     with pytest.raises(ValueError, match="not in the committed product"):
         apply_product_delta(spark, out, data, cat, 0, remove=[DS[3]])
     with pytest.raises(ValueError, match="not in the committed product"):
@@ -790,13 +824,15 @@ def test_remove_of_dataset_not_in_product_is_rejected(
     assert not os.path.exists(f"{out}/_commits/v=1.json")
 
 
-def test_marker_without_file_manifest_is_refused(spark, bundle, tmp_path):
+def test_marker_without_file_manifest_is_refused(
+    spark, bundle, bootstrapped, tmp_path
+):
     """A commit descriptor with no 'files' manifest is refused with a
     rebuild hint by every path that resolves a snapshot — reads,
     maintenance batches and retention GC — instead of failing on a
     KeyError deep inside one of them."""
     out = str(tmp_path / "product")
-    bootstrap_product_maintenance(_build(spark, bundle, DS[:1]), out)
+    bootstrapped(DS[:1], out)
     for path in (f"{out}/{COMMIT_MARKER}", f"{out}/_commits/v=0.json"):
         with open(path) as f:
             commit = json.load(f)
